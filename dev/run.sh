@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a compiled graft main class directly (no sbt lock, no sbt startup):
 #   dev/run.sh graft.Verify /root/testdata/sf0.01 /tmp/out
-#   SPARK_DRIVER_MEM=24g dev/run.sh graft.ScalingBench 1000000 5 2 2 8
+#   dev/run.sh graft.Dev explain q04_routing   # dev measurements; no mode prints the usage
 # Requires `sbt compile` to have produced target/scala-2.13/classes.
 set -euo pipefail
 cd "$(dirname "$0")/.."

@@ -11,10 +11,15 @@ NHIGH=$((NLOW * 4))
 # AND N executors' memory, so each arm gets heap proportional to cores
 # (4 GiB/core, half young gen) on top of its pinned CPUs.
 GB_PER_CORE="${GB_PER_CORE:-4}"
+# shuffle, spill and sink output on tmpfs: local disk bandwidth is fixed
+# per box and would otherwise be the Amdahl term of a threads-scaling
+# measurement (a real cluster scales local disks with executors)
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/dev/shm/graft-spark-local}"
+mkdir -p "$SPARK_LOCAL_DIRS"
 low=$(SPARK_DRIVER_MEM="$((NLOW*GB_PER_CORE))g" SPARK_GC_OPTS="-XX:+UseParallelGC -Xmn$((NLOW*GB_PER_CORE/2))g" \
-  taskset -c 0-$((NLOW-1)) dev/run.sh graft.ScalingBench arm "$NLOW" "$NCONVS" "$TPC" "$REPEATS" 2>/dev/null | grep '"arm"')
+  taskset -c 0-$((NLOW-1)) dev/run.sh graft.Dev scaling-arm "$NLOW" "$NCONVS" "$TPC" "$REPEATS" 2>/dev/null | grep '"arm"')
 high=$(SPARK_DRIVER_MEM="$((NHIGH*GB_PER_CORE))g" SPARK_GC_OPTS="-XX:+UseParallelGC -Xmn$((NHIGH*GB_PER_CORE/2))g" \
-  taskset -c 0-$((NHIGH-1)) dev/run.sh graft.ScalingBench arm "$NHIGH" "$NCONVS" "$TPC" "$REPEATS" 2>/dev/null | grep '"arm"')
+  taskset -c 0-$((NHIGH-1)) dev/run.sh graft.Dev scaling-arm "$NHIGH" "$NCONVS" "$TPC" "$REPEATS" 2>/dev/null | grep '"arm"')
 echo "$low"
 echo "$high"
 python3 - "$low" "$high" <<'EOF'

@@ -143,7 +143,6 @@ object SparkEntry {
     // Expression — SURVEY §7.3): all structured fields of the line from
     // a single matcher pass instead of one regexp_extract per field
     "q16_grok_parse" -> ((s, dir) => {
-      graft.functions.Grok.register(s)
       val g = graft.functions.Grok.grokExtract(col("text"), GrokPattern)
       transcripts(s, dir)
         .select(col("conv_id"), col("turn_idx"), g.as("g"))

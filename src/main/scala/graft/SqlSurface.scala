@@ -21,14 +21,10 @@ import graft.sources.Transcripts
   */
 object SqlSurface {
 
-  /** Register the native codegen expressions under their SQL names:
-    * `md5lower64`, `simhash64`, `grok_extract`, `dotq`. */
-  def registerFunctions(spark: SparkSession): Unit = {
-    graft.functions.Hash64.register(spark)
-    graft.functions.SimHash.register(spark)
-    graft.functions.Grok.register(spark)
-    graft.functions.VecOps.register(spark)
-  }
+  /** Register the native expressions under their SQL names
+    * ([[graft.functions.Natives]]). */
+  def registerFunctions(spark: SparkSession): Unit =
+    graft.functions.Natives.register(spark)
 
   /** Register the transcript-side pipeline relations over `sfDir` as
     * `graft_*` temp views (turns, enriched, routing, metric tables). */

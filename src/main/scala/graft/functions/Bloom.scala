@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Bloom-filter build/probe surfaced as session functions, wrapping
@@ -25,30 +23,15 @@ import org.apache.spark.sql.functions._
   */
 object Bloom {
 
-  /** Register `bloom_build` (aggregate) and `bloom_probe` (predicate) in
-    * the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_build",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_probe",
-      exprs => new BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in"
-    )
-  }
-
   /** Aggregate building a serialized bloom filter over xxhash64(c).
     * `estItems`/`numBits` are capped by Spark's runtime-filter confs. */
   def build(c: Column, estItems: Long, numBits: Long): Column =
-    call_function("bloom_build", xxhash64(c), lit(estItems), lit(numBits))
+    Natives.call("bloom_build", xxhash64(c), lit(estItems), lit(numBits))
 
   /** Membership probe of xxhash64(c) against a serialized filter.
     * No false negatives; false-positive rate set by the build sizing. */
   def probe(bloomBytes: Array[Byte], c: Column): Column =
-    call_function("bloom_probe", lit(bloomBytes), xxhash64(c))
+    Natives.call("bloom_probe", lit(bloomBytes), xxhash64(c))
 
   /** Run the build aggregate over `col` of `df` and return the serialized
     * filter, or None when the relation is empty (the aggregate yields
@@ -64,8 +47,6 @@ object Bloom {
       c: Column,
       estItems: Long,
       numBits: Long
-  ): Option[Array[Byte]] = {
-    register(df.sparkSession)
+  ): Option[Array[Byte]] =
     Option(df.agg(build(c, estItems, numBits).as("bf")).head().getAs[Array[Byte]]("bf"))
-  }
 }

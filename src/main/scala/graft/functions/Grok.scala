@@ -31,27 +31,9 @@ object Grok {
   def groupNamesOf(pattern: String): Seq[String] =
     "\\(\\?<([A-Za-z][A-Za-z0-9]*)>".r.findAllMatchIn(pattern).map(_.group(1)).toSeq
 
-  /** Register `grok_extract` in the session's function registry; the
-    * pattern argument must be a foldable string (a literal). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "grok_extract",
-      { exprs =>
-        require(exprs.length == 2, "grok_extract(text, pattern) takes two arguments")
-        val pat = exprs(1)
-        require(pat.foldable && pat.dataType == StringType,
-          "grok_extract pattern must be a string literal")
-        val p = pat.eval()
-        require(p != null, "grok_extract pattern must not be null")
-        GrokExtract(exprs.head, p.toString)
-      },
-      "built-in"
-    )
-
-  /** Column API: grok_extract(c, pattern) — call [[register]] first. */
+  /** Column API: grok_extract(c, pattern). */
   def grokExtract(c: Column, pattern: String): Column =
-    org.apache.spark.sql.functions.call_function(
-      "grok_extract", c, org.apache.spark.sql.functions.lit(pattern))
+    Natives.call("grok_extract", c, org.apache.spark.sql.functions.lit(pattern))
 }
 
 case class GrokExtract(child: Expression, pattern: String) extends UnaryExpression {

@@ -20,17 +20,8 @@ object Hash64 {
     SimHash.md5Lower64(bytes, 0, bytes.length)
   }
 
-  /** Register `md5lower64` in the session's function registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5lower64",
-      exprs => Md5Lower64Expr(exprs.head),
-      "built-in"
-    )
-
-  /** Column API: md5lower64(s) — call [[register]] on the session first. */
-  def md5lower64(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("md5lower64", c)
+  /** Column API: md5lower64(s). */
+  def md5lower64(c: Column): Column = Natives.call("md5lower64", c)
 }
 
 case class Md5Lower64Expr(child: Expression) extends UnaryExpression {

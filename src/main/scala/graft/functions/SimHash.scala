@@ -90,18 +90,9 @@ object SimHash {
 
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
-  /** Register `simhash64` in the session's function registry (idempotent);
-    * the expression then participates in analysis/codegen like a builtin. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64",
-      exprs => SimHash64Expr(exprs.head),
-      "built-in"
-    )
-
-  /** Column API: simhash64(text) — call [[register]] on the session first. */
-  def simhash(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("simhash64", c)
+  /** Column API: simhash64(text); the expression participates in
+    * analysis/codegen like a builtin. */
+  def simhash(c: Column): Column = Natives.call("simhash64", c)
 }
 
 case class SimHash64Expr(child: Expression) extends UnaryExpression {

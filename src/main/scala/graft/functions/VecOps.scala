@@ -68,28 +68,11 @@ object VecOps {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Register `dotq` + `quant8` in the session's function registry
-    * (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dotq",
-      exprs => DotQExpr(exprs.head, exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quant8",
-      exprs => Quant8Expr(exprs.head),
-      "built-in"
-    )
-  }
+  /** Column API: dotq(a, b). */
+  def dotq(a: Column, b: Column): Column = Natives.call("dotq", a, b)
 
-  /** Column API: dotq(a, b) — call [[register]] on the session first. */
-  def dotq(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("dotq", a, b)
-
-  /** Column API: quant8(a) — call [[register]] on the session first. */
-  def quant8(a: Column): Column =
-    org.apache.spark.sql.functions.call_function("quant8", a)
+  /** Column API: quant8(a). */
+  def quant8(a: Column): Column = Natives.call("quant8", a)
 }
 
 case class Quant8Expr(child: Expression)

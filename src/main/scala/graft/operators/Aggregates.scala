@@ -163,12 +163,6 @@ object Aggregates {
       )
   }
 
-  /** `asserts_span_count_total` derived from the shared rollup. */
-  def spanCountsFrom(rollup: DataFrame): DataFrame =
-    rollup
-      .groupBy("env", "site", "namespace", "service")
-      .agg(sum("n_spans").as("span_count"))
-
   /** RED rollup (request / error / duration) per tumbling window and
     * (service, request context) — the `otel_span_latency_seconds`
     * histogram's sum/count plus error counts, keyed per BASELINE by the
@@ -277,26 +271,6 @@ object Aggregates {
       .join(routing.filter(col("kept")).select("conv_id"), Seq("conv_id"))
       .groupBy("env", "site", "namespace", "service")
       .agg(count(lit(1)).as("sampled_span_count"))
-
-  /** Metric-series cardinality guard: rank of each (service_key,
-    * request_context) by first-seen event time — the batch re-expression
-    * of the reference's per-service TTL'd request-context cache
-    * (metric_helper.go:85-141): metrics are captured only for the first
-    * `LimitPerService` distinct request contexts per service; over-cap
-    * contexts are dropped from the metric path ("Too many request
-    * contexts", metric_helper.go:134-139).
-    *
-    * Scale shape: the rank runs over the DISTINCT (service_key, request
-    * context) dim — a partial-aggregable groupBy, tiny output — never a
-    * window over span rows; the join back is broadcast-sized whenever the
-    * cap is meaningful (the whole point is that contexts-per-service is
-    * bounded).
-    */
-  def metricContextRank(enriched: DataFrame): DataFrame =
-    firstSeenRank(
-      enriched.filter(col("span_class") =!= "internal"),
-      "service_key", "request_context", "ts", "ctx_rank"
-    )
 
   /** The reference's latency histogram with its FULL label set and the
     * cardinality cap applied (metrics.go:79-103 registration,

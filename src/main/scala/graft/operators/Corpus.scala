@@ -120,7 +120,6 @@ object Corpus {
       salt: String = "budget"
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Hash64.register(docs.sparkSession)
     val h = graft.functions.Hash64
       .md5lower64(concat(col("doc_id").cast("string"), lit(":" + salt)))
       .bitwiseAND(lit(Long.MaxValue))

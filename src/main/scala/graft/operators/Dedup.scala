@@ -43,10 +43,12 @@ object Dedup {
     // pattern decontaminationPairs exposes).
     val withFp = docs.select(col("doc_id"), fp.as("fingerprint"))
     val groups = withFp
-      .groupBy("fingerprint")
+      .groupBy(col("fingerprint").as("group_fp"))
       .agg(min("doc_id").as("canonical_doc_id"), count(lit(1)).as("group_size"))
+    // null-safe: NULL-text docs (NULL fingerprint) form one group, as
+    // under the oracle's PARTITION BY fingerprint, instead of vanishing
     withFp
-      .join(groups, Seq("fingerprint"))
+      .join(groups, col("fingerprint") <=> col("group_fp"))
       .withColumn("is_duplicate", col("doc_id") =!= col("canonical_doc_id"))
       .select("doc_id", "fingerprint", "canonical_doc_id", "group_size", "is_duplicate")
   }
@@ -182,11 +184,6 @@ object Dedup {
         ).as("sig")
       )
 
-  /** Per-doc LSH bands: (band_idx, band_key) where band_key concatenates
-    * the band's minhash components. */
-  def minhashBands(docs: DataFrame, w: Int = 3): DataFrame =
-    minhashBandsFromSig(minhashSigDf(docs, w))
-
   /** Band derivation from an existing signature relation — lets a caller
     * cache the shingle->signature DAG once and reuse it for both the band
     * join and the signature-compare sides (see [[minhashLshPairs]]). */
@@ -206,10 +203,8 @@ object Dedup {
       .select(col("doc_id"), col("sig"), col("band.band_idx"), col("band.band_key"))
 
   /** Per-doc 64-bit SimHash (native codegen expression). */
-  def simhashes(docs: DataFrame): DataFrame = {
-    graft.functions.SimHash.register(docs.sparkSession)
+  def simhashes(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), graft.functions.SimHash.simhash(col("text")).as("simhash"))
-  }
 
   /** Chunk-pair combinations for the multi-index pigeonhole scheme: with
     * m = maxHamming + 2 bit-chunks, a pair within Hamming maxHamming has
@@ -296,7 +291,6 @@ object Dedup {
     */
   def winnowingFingerprints(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Hash64.register(docs.sparkSession)
     val nGrams = greatest(length(col("text")) - (k - 1), lit(1))
     val grams = docs
       .select(col("doc_id"), col("text"), explode(sequence(lit(1), nGrams)).as("i"))
@@ -339,7 +333,6 @@ object Dedup {
     */
   def cdcChunks(docs: DataFrame, k: Int = 8, divisor: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Hash64.register(docs.sparkSession)
     val n = length(col("text"))
     val positions = docs
       .filter(n > 0)
@@ -480,7 +473,6 @@ object Dedup {
       pctTrain: Int = 90,
       pctValidation: Int = 5
   ): DataFrame = {
-    graft.functions.Hash64.register(docs.sparkSession)
     val bucket = pmod(
       graft.functions.Hash64
         .md5lower64(concat(col("doc_id").cast("string"), lit(":" + salt)))
@@ -589,7 +581,6 @@ object Dedup {
     val cand = bloom match {
       case None => train.where(lit(false)) // no test fps -> nothing contaminated
       case Some(bytes) =>
-        graft.functions.Bloom.register(docs.sparkSession)
         graft.Telemetry.observeCount(
           train.where(graft.functions.Bloom.probe(bytes, col("fp"))),
           "bloom_candidate_rows"

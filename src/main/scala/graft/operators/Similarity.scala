@@ -24,8 +24,7 @@ object Similarity {
     transform(vec, x => round(x.cast("double") * scale).cast("long"))
 
   /** Exact integer dot product of two quantized vectors — the native
-    * codegen expression ([[graft.functions.VecOps]]); the session must
-    * have it registered (every operator entry point here does). */
+    * codegen expression ([[graft.functions.VecOps]]). */
   def dotQ(a: Column, b: Column): Column =
     graft.functions.VecOps.dotq(a, b)
 
@@ -53,7 +52,6 @@ object Similarity {
     * sublinear-scan half is [[ivfInt8TopK]], which composes the same
     * int8 representation with IVF's inverted lists. */
   def int8TopK(corpus: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    graft.functions.VecOps.register(corpus.sparkSession)
     val c = corpus.select(col("vec_id").as("n_id"), quantizeInt8(quantize(col("embedding"))).as("nv"))
     val q = queries.select(col("vec_id").as("q_id"), quantizeInt8(quantize(col("embedding"))).as("qv"))
     val scored = c
@@ -72,7 +70,6 @@ object Similarity {
     * vectors (excluding itself), ties broken by neighbor id.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    graft.functions.VecOps.register(corpus.sparkSession)
     val c = corpus.select(col("vec_id").as("n_id"), quantize(col("embedding")).as("nv"))
     val q = queries.select(col("vec_id").as("q_id"), quantize(col("embedding")).as("qv"))
     val scored = c
@@ -131,7 +128,6 @@ object Similarity {
       vecCol: String,
       tables: Seq[(Int, Array[Array[Long]])]
   ): DataFrame = {
-    graft.functions.VecOps.register(df.sparkSession)
     val bucketByTable = tables.tail.foldLeft(lshBucket(col(vecCol), tables.head._2)) {
       case (acc, (t, planes)) => when(col("table_idx") === t, lshBucket(col(vecCol), planes)).otherwise(acc)
     }
@@ -202,7 +198,6 @@ object Similarity {
       nCentroids: Int = 16,
       nProbe: Int = 4
   ): DataFrame = {
-    graft.functions.VecOps.register(corpus.sparkSession)
     val cent = broadcast(
       corpus.filter(col("vec_id") < nCentroids)
         .select(col("vec_id").as("c_id"), quantize(col("embedding")).as("cv"))
@@ -262,7 +257,6 @@ object Similarity {
       nCentroids: Int = 16,
       nProbe: Int = 4
   ): DataFrame = {
-    graft.functions.VecOps.register(corpus.sparkSession)
     val cent = broadcast(
       corpus.filter(col("vec_id") < nCentroids)
         .select(col("vec_id").as("c_id"), quantize(col("embedding")).as("cv"))
@@ -356,7 +350,6 @@ object Similarity {
   /** Exact all-pairs cosine near-dups — O(n^2), the recall oracle for
     * [[nearDupPairs]] at test scale only. */
   def nearDupPairsExact(corpus: DataFrame, threshold: Double = 0.9): DataFrame = {
-    graft.functions.VecOps.register(corpus.sparkSession)
     val a = corpus.select(col("vec_id").as("id_a"), quantize(col("embedding")).as("va"))
     val b = corpus.select(col("vec_id").as("id_b"), quantize(col("embedding")).as("vb"))
     a.join(b, col("id_a") < col("id_b"))

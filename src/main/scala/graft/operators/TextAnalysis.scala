@@ -150,7 +150,6 @@ object TextAnalysis {
       rates: Map[String, Double],
       salt: String = "strat"
   ): DataFrame = {
-    graft.functions.Hash64.register(docs.sparkSession)
     val bucket = pmod(
       graft.functions.Hash64
         .md5lower64(concat(col("doc_id").cast("string"), lit(":" + salt)))

@@ -61,9 +61,14 @@ class ConfigLoaderSpec extends SparkTestBase {
     assert(r.serviceKey == "default" && r.replacement == "client_errors")
   }
 
-  test("loads the reference's sample-collector-config.yaml verbatim (value_expr/$$n dialect)") {
-    val yaml = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/sample-collector-config.yaml"))
+  /** Reconstructed reference sample config, loaded from the test classpath. */
+  private def sampleCollectorConfig: String = {
+    val in = getClass.getResourceAsStream("/sample-collector-config.yaml")
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+  }
+
+  test("loads a reconstruction of the reference's sample-collector-config.yaml (value_expr/$$n dialect)") {
+    val yaml = sampleCollectorConfig
     val jc = ConfigLoader.fromYaml(yaml)
     // reference mapstructure field names (config.go:18-37)
     assert(jc.pipeline.env == "dev" && jc.pipeline.site == "dev")
@@ -92,9 +97,7 @@ class ConfigLoaderSpec extends SparkTestBase {
     // mirrors span_enrichment_test.go:128-204: 4xx status -> client_errors,
     // 5xx -> server_errors, via the loaded (value_expr) rules
     import org.apache.spark.sql.functions._
-    val yaml = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/sample-collector-config.yaml"))
-    val jc = ConfigLoader.fromYaml(yaml)
+    val jc = ConfigLoader.fromYaml(sampleCollectorConfig)
     val errCol = graft.functions.Rules.compileTarget(
       jc.rules("asserts.error.type"),
       attr = _ => col("status"), kindCol = col("kind"),

@@ -27,6 +27,19 @@ class DocOpsSpec extends SparkTestBase {
     assert(r(3L) == (3L, false))
   }
 
+  test("exact dedup: NULL-text docs are kept and grouped together (oracle PARTITION BY semantics)") {
+    val d = Seq[(Long, String)]((1L, "a b"), (2L, null), (3L, "a  b"), (4L, null))
+      .toDF("doc_id", "text")
+    val r = Dedup.exact(d).collect().map(x =>
+      x.getAs[Long]("doc_id") ->
+        (x.getAs[String]("fingerprint"), x.getAs[Long]("canonical_doc_id"),
+          x.getAs[Long]("group_size"), x.getAs[Boolean]("is_duplicate"))).toMap
+    assert(r.keySet == Set(1L, 2L, 3L, 4L))
+    assert(r(2L) == ((null, 2L, 2L, false)))
+    assert(r(4L) == ((null, 2L, 2L, true)))
+    assert(r(3L)._2 == 1L && r(3L)._3 == 2L && r(3L)._4)
+  }
+
   test("shingles: w-grams of tokens; short docs fall back to whole text") {
     val d = docDf((1L, "a b c d"), (2L, "a b"))
     val sh = d.select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
@@ -282,7 +295,6 @@ class DocOpsSpec extends SparkTestBase {
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("cum_tokens"), r.getAs[Boolean]("kept"))).toMap
     // naive model: same hash, one global (h, doc_id) order per lang
-    graft.functions.Hash64.register(spark)
     val h = graft.functions.Hash64
       .md5lower64(concat(col("doc_id").cast("string"), lit(":budget")))
       .bitwiseAND(lit(Long.MaxValue))

@@ -18,7 +18,6 @@ class GrokSpec extends SparkTestBase {
     "call=(?<svc>[a-z-]+)\\.(?<method>m[0-9]) status=(?<status>[0-9]+)"
 
   test("named fields from one pass; no-match and NULL input give NULL struct") {
-    Grok.register(spark)
     val df = Seq(
       ("a", "call=web.m1 status=200 tail"),
       ("b", "unstructured"),
@@ -49,7 +48,6 @@ class GrokSpec extends SparkTestBase {
   }
 
   test("interpreted eval == codegen path") {
-    Grok.register(spark)
     val e = GrokExtract(Literal.create("call=db.m3 status=404"), pat)
     val interpreted = e.extract(UTF8String.fromString("call=db.m3 status=404"))
     val viaQuery = Seq("call=db.m3 status=404").toDF("text")
@@ -88,7 +86,6 @@ class GrokSpec extends SparkTestBase {
         Option(r.getString(3)) == Option(r.getString(6))
       }
     }
-    Grok.register(spark)
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(20).withWorkers(1)
         .withInitialSeed(Seed(7L)),
